@@ -62,7 +62,6 @@ INGEST_CYCLE = "p50_ms on ingest"
 
 def _per_layer() -> tuple[Metric, ...]:
     m = [
-        Metric("bench.fail_ratio", "ratio", "lower", "validity of the run"),
         Metric("bench.late_ms", "ms", "lower", "validity of the run (serve)"),
         Metric("trace.overhead_pct", "%", "lower", "validity of the run"),
         Metric("bench.peak_rss_mb", "MB", "lower", "rss_mb on every workload"),
@@ -108,13 +107,14 @@ def _per_layer() -> tuple[Metric, ...]:
         m += [
             Metric(f"{q}.plan_ms", "ms", "lower", "p50_ms on analytics"),
             Metric(f"{q}.exec_s", "s", "lower", "p50_ms on analytics"),
+            Metric(f"{q}.jobs", "count", "lower", "p50_ms on analytics"),
+            Metric(f"{q}.tasks", "count", "lower", "p50_ms on analytics"),
         ]
     for mod in MODULES:
         m += [
             Metric(f"queries.{mod}.s", "s", "lower", "p50_ms on analytics"),
             Metric(f"queries.{mod}.cold_minus_warm_s", "s", "lower",
                    "session.cold_op_s on analytics"),
-            Metric(f"queries.{mod}.jobs", "count", "lower", "p50_ms on analytics"),
         ]
     return tuple(m)
 

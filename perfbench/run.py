@@ -39,7 +39,8 @@ from tracing import Tracer, TreeRss, now  # noqa: E402
 
 @dataclass
 class Context:
-    """What a workload gets: its seed, window, tracer and scratch dir."""
+    """What a workload gets: its seed, window, tracer, scratch dir and
+    the memory sampler it wraps its timed window in."""
 
     workload: str
     seed: int
@@ -47,6 +48,7 @@ class Context:
     tracer: Tracer
     work: Path
     cpus: int
+    rss: TreeRss | None = None
     spark: object = None
     attempted: int = 0
     failed: int = 0
@@ -66,20 +68,17 @@ class Context:
         self.spark.sparkContext.setLogLevel("ERROR")
         return self.spark
 
-    def restart_spark(self) -> None:
-        """Stop the session and build a fresh one on the running JVM."""
-        self.spark.catalog.clearCache()
-        self.spark.stop()
-        self.start_spark()
-
     def repeat_setup(self, reps: int, extra=None) -> list[float]:
         """Set the program up ``reps`` more times on the running JVM:
-        restart the session, then run ``extra()`` (e.g. cache warming).
-        Returns the seconds each whole set-up took."""
+        stop the session, then time a fresh ``get_spark`` followed by
+        ``extra()`` (e.g. cache warming). Returns the seconds each
+        set-up took; the teardown before it is not counted."""
         out = []
         for _ in range(reps):
+            self.spark.catalog.clearCache()
+            self.spark.stop()
             t = now()
-            self.restart_spark()
+            self.start_spark()
             if extra is not None:
                 extra()
             out.append(now() - t)
@@ -131,15 +130,16 @@ def _pin_environment(work: Path) -> int:
     """Pin what the program reads from its environment before the JVM
     starts: cores (``local[nproc]`` and as many shuffle partitions),
     local and temporary dirs inside the checkout, driver heap and UTC.
-    A 1g heap keeps the JVM's lazy heap growth, the widest source of
-    run-to-run spread in memory readings, small."""
+    The heap is pinned at 1g rather than the program's 8g default: it
+    keeps the JVM's lazy heap growth, the widest source of run-to-run
+    spread in memory readings, small."""
     cpus = len(os.sched_getaffinity(0))
     local_dirs, tmp = work / "spark-local", work / "tmp"
     local_dirs.mkdir()
     tmp.mkdir()
     os.environ["SPARK_GRAFT_CPUS"] = str(cpus)
     os.environ["SPARK_LOCAL_DIRS"] = str(local_dirs)
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "1g")
+    os.environ["SPARK_GRAFT_DRIVER_MEM"] = "1g"
     os.environ["TMPDIR"] = str(tmp)
     os.environ["JAVA_TOOL_OPTIONS"] = f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData"
     os.environ["TZ"] = "UTC"
@@ -170,21 +170,20 @@ def main(argv=None) -> int:
     work.mkdir(parents=True)
     cpus = _pin_environment(work)
     ctx = Context(args.workload, args.seed, args.seconds,
-                  Tracer(enabled=bool(args.trace)), work, cpus)
+                  Tracer(enabled=bool(args.trace)), work, cpus, TreeRss())
 
     import workloads
 
     try:
-        with TreeRss() as rss:
+        with ctx.rss:
             try:
                 result = workloads.RUNNERS[args.workload](ctx)
             finally:
                 ctx.stop_spark()
     finally:
         shutil.rmtree(work, ignore_errors=True)
-    result["rss_mb"] = rss.median_mb
-    result["bench.peak_rss_mb"] = rss.peak_mb
-    result["bench.fail_ratio"] = ctx.failed / max(ctx.attempted, 1)
+    result["rss_mb"] = ctx.rss.median_mb
+    result["bench.peak_rss_mb"] = ctx.rss.peak_mb
     if args.trace:
         t = ctx.tracer
         result["trace.overhead_pct"] = 100.0 * t.overhead_s / max(result.pop("_wall_s"), 1e-9)

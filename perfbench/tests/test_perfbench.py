@@ -151,3 +151,18 @@ def test_table_sizes(tmp_path):
     n = datagen.write_tables(str(tmp_path), 1, 0.001)
     assert pq.read_metadata(tmp_path / "part.parquet").num_rows == n.part
     assert pq.read_metadata(tmp_path / "events.parquet").num_rows == n.events
+
+
+def test_memory_is_sampled_only_inside_the_window():
+    import time
+
+    from tracing import TreeRss
+
+    with TreeRss(interval=0.05) as idle:
+        time.sleep(0.2)
+    assert (idle.median_mb, idle.peak_mb) == (0.0, 0.0)
+    with TreeRss(interval=0.05) as rss:
+        with rss.window():
+            time.sleep(0.2)
+        time.sleep(0.1)
+    assert 0.0 < rss.median_mb <= rss.peak_mb

@@ -215,11 +215,14 @@ def tree_rss_bytes(root: int) -> int:
 
 
 class TreeRss:
-    """Resident memory of this process and all its descendants.
+    """Resident memory of this process and all its descendants while a
+    workload is inside its timed window.
 
     A separate sampler process reads /proc every ``interval`` seconds,
     so sampling takes no interpreter time from the process it
-    measures. ``median_mb`` and ``peak_mb`` summarize the samples."""
+    measures. It samples only between the enter and exit of
+    ``window()``; ``median_mb`` and ``peak_mb`` summarize those
+    samples."""
 
     def __init__(self, interval: float = 0.2) -> None:
         self.interval = interval
@@ -231,6 +234,19 @@ class TreeRss:
             [sys.executable, __file__, str(os.getpid()), str(self.interval)],
             stdin=subprocess.PIPE, stdout=subprocess.PIPE, text=True)
         return self
+
+    def _send(self, line: str) -> None:
+        self._proc.stdin.write(line + "\n")
+        self._proc.stdin.flush()
+
+    @contextmanager
+    def window(self):
+        """Sample the tree's memory while the block runs."""
+        self._send("on")
+        try:
+            yield
+        finally:
+            self._send("off")
 
     def __exit__(self, *exc) -> None:
         out, _ = self._proc.communicate("stop\n", timeout=30)
@@ -245,17 +261,31 @@ class TreeRss:
         return self.peak / (1024 * 1024)
 
 
-def _sample_until_stdin(root: int, interval: float) -> None:
-    """Sampler process: print the median and peak tree RSS (without
-    itself) once a line arrives on stdin."""
-    me, samples = os.getpid(), []
-    while True:
+def _sample_windows(root: int, interval: float) -> None:
+    """Sampler process: between "on" and "off" lines on stdin, sample
+    the tree RSS (without itself) every ``interval`` seconds and at
+    both ends; on "stop" print the median and peak of the samples."""
+    me, samples, sampling, buf = os.getpid(), [], False, b""
+
+    def sample():
         samples.append(tree_rss_bytes(root) - tree_rss_bytes(me))
-        ready, _, _ = select.select([sys.stdin], [], [], interval)
-        if ready:
+
+    while True:
+        ready, _, _ = select.select([sys.stdin], [], [], interval if sampling else None)
+        if not ready:
+            sample()
+            continue
+        chunk = os.read(sys.stdin.fileno(), 1024)
+        buf += chunk
+        *lines, buf = buf.split(b"\n")
+        for cmd in lines:
+            if cmd in (b"on", b"off"):
+                sample()
+                sampling = cmd == b"on"
+        if b"stop" in lines or not chunk:
             break
-    print(median(samples), max(samples), flush=True)
+    print(median(samples), max(samples, default=0.0), flush=True)
 
 
 if __name__ == "__main__":
-    _sample_until_stdin(int(sys.argv[1]), float(sys.argv[2]))
+    _sample_windows(int(sys.argv[1]), float(sys.argv[2]))
