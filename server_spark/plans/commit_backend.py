@@ -2,15 +2,17 @@
 
 The medallion layer's transactional correctness rests on one
 primitive: an atomic put-if-absent used to claim manifest versions
-(`medallion._claim_batch_id`) and to hold the advisory commit lock.
-On a local filesystem that primitive is ``O_CREAT|O_EXCL``; on object
-storage it is a conditional PUT (S3 ``If-None-Match: *`` — supported
-since 2024-08 — and GCS ``x-goog-if-generation-match: 0``). This
-module makes the primitive INJECTABLE the same way the JPEG codec is
+(`medallion._claim_batch_id`) and to hold THE commit lock
+(`medallion.commit_lock` — the only lock implementation, on every
+root). On a local filesystem the primitive is ``LocalFSBackend``'s
+stage-then-``os.link`` create; on object storage it is a conditional
+PUT (S3 ``If-None-Match: *`` — supported since 2024-08 — and GCS
+``x-goog-if-generation-match: 0``). This module makes the primitive
+INJECTABLE the same way the JPEG codec is
 (``multimodal/image.py _injected_jpeg_codec``): a deployment sets
 ``SPARK_GRAFT_COMMIT_BACKEND=module:factory`` at launch and the claim
-machinery becomes multi-driver safe on a bucket without touching any
-caller.
+and lock machinery becomes multi-driver safe on a bucket without
+touching any caller.
 
 The protocol is deliberately the object-store wire surface and
 nothing more — five verbs every store has:
@@ -52,8 +54,9 @@ new immutable data generation and CAS the table's current-version
 pointer, which is how layout maintenance works on a bucket at all.
 
 NOT in the protocol: rename, mtime, directory semantics. Those are
-POSIX-isms the backend-routed machinery must not rely on — the
-two-rename swap layer in ``plans.maintenance`` therefore stays
+POSIX-isms the backend-routed machinery must not rely on (the lock's
+liveness is the ``beat_at`` in its payload, not a file mtime) — the
+two-rename partition compactor in ``plans.maintenance`` therefore stays
 LOCAL-FS ONLY and rejects URI roots loudly rather than pretending a
 bucket can rename. The object-store answer for compaction / Z-order
 / table swap is ``plans.versioned_table`` (r14): immutable data
@@ -111,14 +114,14 @@ def is_uri(path: str) -> bool:
 
 
 class LocalFSBackend:
-    """The default: POSIX primitives with object-store EXPOSURE
-    semantics — every object appears fully-written or not at all.
-    put_if_absent stages the payload to a temp file and claims the
-    key with ``os.link`` (atomic fail-if-exists): the r13 review
-    showed the earlier O_EXCL-then-write form exposed a torn (empty)
-    payload between create and write, which the backend lock's
-    staleness reader misread as an infinitely-stale claim and broke
-    a milliseconds-old LIVE lock."""
+    """The default for local roots: POSIX primitives with object-store
+    EXPOSURE semantics — every object appears fully-written or not at
+    all. put_if_absent stages the payload to a temp file and claims
+    the key with ``os.link`` (atomic fail-if-exists): the r13 review
+    showed a create-then-write form exposed a torn (empty) payload
+    between create and write, which the lock's staleness reader
+    misread as an infinitely-stale claim and broke a milliseconds-old
+    LIVE lock."""
 
     def put_if_absent(self, path: str, payload: bytes) -> bool:
         os.makedirs(os.path.dirname(path), exist_ok=True)
@@ -238,25 +241,13 @@ class LocalFSBackend:
             return True
 
 
-class LinkConditionalPutBackend(LocalFSBackend):
-    """Historical alias, kept as the tests' named contract fake. It
-    was introduced as the NON-O_EXCL conditional-put backend (stage +
-    os.link, the local analog of an S3 ``If-None-Match: *`` PUT) to
-    prove the claim machinery's correctness comes from the protocol
-    contract rather than the O_EXCL primitive the default backend
-    then used; the r13 review promoted that exact implementation INTO
-    LocalFSBackend (atomic exposure — see its docstring), so this is
-    now an empty subclass. The multi-process mint race still runs
-    over this name."""
-
-
 def injected_backend():
     """Resolve an external backend from ``SPARK_GRAFT_COMMIT_BACKEND``
     ("module:factory" — the factory is CALLED, returning a backend
     instance), or None when unset. Same contract as the JPEG codec
     hook: a configured-but-broken spec raises loudly (silently falling
-    back to local O_EXCL on a bucket deployment would silently lose
-    multi-driver exclusion — the exact failure the backend was
+    back to the local backend on a bucket deployment would silently
+    lose multi-driver exclusion — the exact failure the backend was
     deployed to prevent). Resolution is cached per spec value, and the
     env is read at CALL time: like the codec hook, changing it after
     launch affects new claims only."""

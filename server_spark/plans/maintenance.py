@@ -1,6 +1,7 @@
-"""Table maintenance: small-file compaction (SURVEY.md §1.4 storage
-posture). Append-heavy layers (manifest-gated bronze, gold history
-appends) accumulate one file per micro-batch per partition; thousands
+"""Table maintenance: THE small-file compactor (``compact_partitions``,
+SURVEY.md §1.4 storage posture) plus the incremental golds.
+Append-heavy layers (manifest-gated bronze, gold history appends)
+accumulate one file per micro-batch per partition; thousands
 of tiny parquet files turn every downstream scan into a listing +
 footer-read storm. Compaction rewrites fragmented partitions into
 ~target-sized files.
@@ -23,7 +24,10 @@ Scale notes:
   no longer qualifies as fragmented, and interrupted runs are healed
   on entry.
 - OBJECT-STORE roots: this module's rename/walk machinery rejects
-  URI paths loudly (see ``_require_local``); the bucket-capable
+  URI paths loudly (``commit_backend.local_path``) — os.walk over a
+  bucket URI silently yields nothing (a compaction would report the
+  table clean) and os.path.exists reads 'absent' (a gold fold would
+  double-apply onto state it could not see); the bucket-capable
   compaction/Z-order/table-swap is ``plans.versioned_table`` (r14) —
   immutable generations + a CAS-swapped version pointer through the
   commit backend, which also removes the two-rename swap's torn
@@ -39,31 +43,20 @@ import shutil
 
 from pyspark.sql import SparkSession
 
-
-def _require_local(path: str, what: str) -> str:
-    """This whole module is POSIX machinery — rename swaps, os.walk
-    listings, open() watermark sidecars. With object-store roots now
-    reachable through the commit backend (r13, plans/commit_backend),
-    a URI path arriving HERE must fail loudly: os.walk over
-    a bucket URI silently yields nothing (a compaction reports the
-    table clean) and os.path.exists reads 'absent' (_gold_watermark
-    would return the never-written epoch and a gold fold would
-    silently DOUBLE-APPLY onto state it could not see). The
-    object-store answer for this layer stays a transactional table
-    format, not these primitives. Delegates to the repo's ONE scheme
-    gate (plans.commit_backend.local_path), which also NORMALIZES
-    ``file:`` URIs — callers must use the returned path, or a
-    'file:/tmp/...' spelling would sail past the bucket check and
-    still no-op in os.walk (r13 review)."""
-    from server_spark.plans.commit_backend import local_path
-
-    return local_path(path, what)
+from server_spark.plans import commit_backend as cb
+from server_spark.plans.medallion import (
+    _PART_KEYS,
+    _price_stats,
+    _serialized_writer,
+    build_gold_churn,
+    load_manifest,
+)
 
 
 def partition_file_stats(root: str) -> dict[str, tuple[int, int]]:
     """{leaf partition dir → (n_data_files, total_bytes)} for a
     (possibly nested) partitioned parquet dataset."""
-    root = _require_local(root, "partition_file_stats")
+    root = cb.local_path(root, "partition_file_stats")
     stats: dict[str, tuple[int, int]] = {}
     for dirpath, _dirnames, filenames in os.walk(root):
         data = [
@@ -125,9 +118,15 @@ def compact_partitions(
     """Rewrite every leaf partition holding ≥ ``min_files`` data files
     into ceil(bytes/target) files. Returns partitions rewritten.
 
-    Single-writer; concurrent readers may see a partition vanish for
-    the instant between the two swap renames (see module docstring).
+    Single-writer: a caller racing medallion writers on the same tree
+    holds ``medallion.commit_lock(root)`` around the call. Concurrent
+    readers may see a partition vanish for the instant between the two
+    swap renames (see module docstring).
     """
+    # normalize ONCE at entry: healing os.walks the root too, and
+    # os.walk over a 'file:/...' spelling yields nothing — a crash-
+    # orphaned .compact_old__ partition would stay hidden from readers
+    root = cb.local_path(root, "compact_partitions")
     _heal_interrupted(root)
     rewritten = 0
     for part_dir, (n_files, total) in partition_file_stats(root).items():
@@ -170,7 +169,7 @@ def schema_drift(spark: SparkSession, table_root: str) -> list[dict]:
     """
     import pyarrow.parquet as pq
 
-    table_root = _require_local(table_root, "schema_drift")
+    table_root = cb.local_path(table_root, "schema_drift")
     files = []
     for dirpath, _dirnames, filenames in os.walk(table_root):
         files.extend(
@@ -288,7 +287,7 @@ def _gold_watermark(data_dir: str) -> dict:
     returned. Only a table with NEITHER raises."""
     import json as _json
 
-    data_dir = _require_local(data_dir, "_gold_watermark")
+    data_dir = cb.local_path(data_dir, "_gold_watermark")
     _heal_gold_aside(data_dir)
     if not os.path.exists(data_dir):
         return {}
@@ -357,41 +356,6 @@ def _commit_gold_swap(merged: DataFrame, data_dir: str, wm: dict) -> None:
         shutil.rmtree(aside)
 
 
-def _writer_lock(paths):
-    """The medallion tree's commit lock, backend-routed — every gold
-    REFRESH and the erasure path take it (r14, the multi-driver soak's
-    prerequisite): two concurrent refreshes of one gold would both
-    read the standing table, both fold, and race the aside two-rename
-    swap (the second rename fails or a fold is overwritten and its
-    watermark regresses); an erasure racing an ingest could rewrite a
-    partition mid-append. Same serialization rule
-    build_silver_incremental has carried since r11. Function-local
-    import: medallion imports this module's swap helpers the same
-    way, so a module-level import would cycle."""
-    from server_spark.plans.medallion import _lock_backend, commit_lock
-
-    return commit_lock(paths.root, backend=_lock_backend(paths))
-
-
-def _serialized_writer(fn):
-    """Decorator: run the whole function body under the tree's commit
-    lock (``_writer_lock``). Declared ON the refresh/erasure function
-    itself — the r14 review killed the seven hand-written three-line
-    wrapper shims this replaces: a new gold refresh added without its
-    wrapper would silently run unlocked, re-opening the concurrent-
-    refresh swap race the lock exists to close. The decorated
-    function's (spark, paths, ...) signature is preserved."""
-    import functools
-
-    @functools.wraps(fn)
-    def wrapper(spark, paths, *args, **kwargs):
-        with _writer_lock(paths):
-            return fn(spark, paths, *args, **kwargs)
-
-    return wrapper
-
-
-
 @_serialized_writer
 def refresh_owner_sketch_gold(spark, paths) -> int:
     """Incrementally maintain a gold table of per-(region, realm)
@@ -413,8 +377,6 @@ def refresh_owner_sketch_gold(spark, paths) -> int:
     import json as _json
 
     from pyspark.sql import functions as F  # local: matches module style
-
-    from server_spark.plans.medallion import load_manifest
 
     gold_dir = os.path.join(paths.root, "gold", "owner_sketches")
     data_dir = os.path.join(gold_dir, "sketches")
@@ -493,15 +455,13 @@ def refresh_churn_gold(spark, paths) -> int:
 
     from pyspark.sql import Window
 
-    from server_spark.plans.medallion import load_manifest
-
     # r13 review: this refresh keeps its own raw sidecar (gold_dir-
     # level, see the crash-safety note below) rather than going
     # through _gold_watermark, so it needs the loud-URI gate itself —
     # on a bucket root os.path.exists would read absent, last would
     # reset to 0, and every refresh would silently re-pair the ENTIRE
     # history while the sidecar landed in a literal './s3:/...' dir.
-    root = _require_local(paths.root, "refresh_churn_gold")
+    root = cb.local_path(paths.root, "refresh_churn_gold")
     gold_dir = os.path.join(root, "gold", "churn_incr")
     wm_file = os.path.join(gold_dir, "_watermark")
     data_dir = os.path.join(gold_dir, "data")
@@ -731,8 +691,6 @@ def refresh_price_hist_gold(spark, paths) -> int:
     tests along with the ≤5% relative-error bound on the median."""
     import json as _json
 
-    from server_spark.plans.medallion import load_manifest
-
     gold_dir = os.path.join(paths.root, "gold", "price_hist")
     data_dir = os.path.join(gold_dir, "hist")
     keys = ["region", "realm_slug", "item"]
@@ -838,8 +796,6 @@ def refresh_item_bitmap_gold(spark, paths) -> int:
     COUNT(DISTINCT) is asserted in tests."""
     import json as _json
 
-    from server_spark.plans.medallion import load_manifest
-
     gold_dir = os.path.join(paths.root, "gold", "item_bitmaps")
     data_dir = os.path.join(gold_dir, "bitmaps")
     keys = ["region", "realm_slug"]
@@ -927,8 +883,6 @@ def refresh_hot_items_gold(spark, paths, cap: int = _MG_CAP) -> int:
     undercount bound N/(cap+1)."""
     import json as _json
 
-    from server_spark.plans.medallion import load_manifest
-
     gold_dir = os.path.join(paths.root, "gold", "hot_items")
     data_dir = os.path.join(gold_dir, "summary")
 
@@ -989,8 +943,6 @@ def read_hot_items_gold(spark, paths):
 # ---------------------------------------------------------------------------
 # Right-to-be-forgotten: erase one owner across the medallion
 # ---------------------------------------------------------------------------
-
-_PART_KEYS = ["region", "realm_slug", "dump_date"]
 
 # Gold state dirs that CANNOT unlearn a deletion and must rebuild from
 # the cleaned bronze: HLL sketches and Misra-Gries summaries have no
@@ -1096,27 +1048,15 @@ def forget_owner(spark, paths, owner) -> dict:
         _overwrite_cleaned(spark, paths.silver, cleaned_silver, affected)
 
         if os.path.exists(paths.gold_prices):
-            from server_spark.operators import auctions as ops
-
             slice_ = spark.read.parquet(paths.silver).join(
                 aff_df, _PART_KEYS, "left_semi"
             )
-            exploded = slice_.select(
-                "region", "realm_slug", "dump_date", "dump_ts", "item",
-                "buyout", "quantity", F.explode("auc_list").alias("auc"),
+            _overwrite_cleaned(
+                spark, paths.gold_prices, _price_stats(slice_), affected
             )
-            stats = ops.price_stats(
-                exploded,
-                group_keys=[
-                    "region", "realm_slug", "dump_date", "dump_ts", "item",
-                ],
-            )
-            _overwrite_cleaned(spark, paths.gold_prices, stats, affected)
 
     if os.path.exists(paths.gold_churn):
-        from server_spark.plans import medallion as med
-
-        med.build_gold_churn(spark, paths)
+        build_gold_churn(spark, paths)
         report["golds_reset"].append("churn")
 
     for name in _RESET_GOLDS:
@@ -1214,8 +1154,6 @@ def refresh_price_moments_gold(spark, paths) -> int:
     healing aside-swap as every other gold. Returns batches folded
     (0 = current); incremental == one-shot EXACTLY (decimal sums)."""
     import json as _json
-
-    from server_spark.plans.medallion import load_manifest
 
     gold_dir = os.path.join(paths.root, "gold", "price_moments")
     data_dir = os.path.join(gold_dir, "data")

@@ -24,6 +24,7 @@ Storage design for 100 TB (SURVEY.md §1.4):
 from __future__ import annotations
 
 import contextlib
+import functools
 import json
 import os
 import threading
@@ -39,31 +40,27 @@ from server_spark.plans import commit_backend as cb
 
 @dataclass
 class MedallionPaths:
-    """Root of one medallion tree. LOCAL-FILESYSTEM by default,
-    enforced at construction (r12 advisor finding): the transactional
-    mechanisms under this root — the O_EXCL commit lock, the
-    tmp→aside→rename table swaps, the in-table watermark files, and
-    load_manifest's "never written" probe — are POSIX-rename
-    semantics. On an object-store URI (s3://bucket, gs://bucket) the
-    locks would not exclude, the swaps would not be atomic, and the
-    manifest probe would always read "absent" and silently re-mint
-    historical batch_ids.
+    """Root of one medallion tree. The correctness-bearing machinery
+    under it — batch-id claims, THE commit lock, the manifest/bronze
+    "never written" probes — routes through one COMMIT BACKEND
+    (``cb.backend_for``): the explicit ``backend`` field (wins,
+    mirroring the JPEG codec's explicit-argument rule), else the
+    ``SPARK_GRAFT_COMMIT_BACKEND`` env hook, else ``LocalFSBackend``
+    on a local root (see ``plans/commit_backend.py``). Spark's own
+    parquet IO goes through whatever Hadoop connector serves the
+    scheme.
 
-    r13 (VERDICT r12 item 2): an object-store root IS accepted when a
-    COMMIT BACKEND is supplied — either the explicit ``backend`` field
-    (wins, mirroring the JPEG codec's explicit-argument rule) or the
-    ``SPARK_GRAFT_COMMIT_BACKEND`` env hook (see
-    ``plans/commit_backend.py``). With a backend, the correctness-
-    bearing machinery (batch-id claims, the commit lock, the
-    manifest/bronze existence probes) routes through the backend's
-    conditional-PUT/GET/LIST/DELETE verbs; Spark's own parquet IO
-    goes through whatever Hadoop connector serves the scheme. The
-    rename-based maintenance layer (compaction/table swaps in
-    ``plans.maintenance``) remains local-FS-only and rejects URI
-    roots loudly — buckets cannot rename; the bucket-capable layout
-    rewrite is ``plans.versioned_table`` (r14): immutable
-    generations + a CAS-swapped version pointer, rename-free by
-    construction."""
+    An object-store root (s3://bucket, gs://bucket) is accepted only
+    when a backend is supplied, enforced at construction (r12/r13):
+    without one the local fallback would claim and lock inside a
+    literal './s3:/...' directory and exclude nothing, and the
+    manifest probe would always read "absent" and silently re-mint
+    historical batch_ids. The rename-based maintenance layer (the
+    partition compactor and gold table swaps in ``plans.maintenance``)
+    remains local-FS-only and rejects URI roots loudly — buckets
+    cannot rename; the bucket-capable layout rewrite is
+    ``plans.versioned_table`` (r14): immutable generations + a
+    CAS-swapped version pointer, rename-free by construction."""
 
     root: str
     backend: object | None = None
@@ -85,7 +82,7 @@ class MedallionPaths:
             if self.backend is None and cb.injected_backend() is None:
                 raise ValueError(
                     f"MedallionPaths is local-FS only without a commit "
-                    f"backend (os.rename/O_EXCL transaction machinery); "
+                    f"backend (os.rename transaction machinery); "
                     f"got URI root {self.root!r}. "
                     "Supply backend= or set SPARK_GRAFT_COMMIT_BACKEND "
                     "(plans/commit_backend.py), or use a Delta/Iceberg-"
@@ -120,10 +117,6 @@ class MedallionPaths:
         return os.path.join(self.root, "manifest", "ingested_dumps")
 
 
-def _dynamic_overwrite(spark: SparkSession) -> None:
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
-
 @contextlib.contextmanager
 def commit_lock(
     root: str,
@@ -134,69 +127,58 @@ def commit_lock(
     """Exclusive writer lock for the manifest commit log (r11,
     VERDICT r10 item 2).
 
-    r13: pass ``backend`` (or construct MedallionPaths with one / set
-    SPARK_GRAFT_COMMIT_BACKEND) to hold the lock through a commit
-    backend's PUT/GET/DELETE verbs instead of POSIX O_EXCL — the
-    object-store variant. That path trades the POSIX lock's atomic
-    rename-based stale-break for a read-check-delete break (two
-    breakers can race; best-effort by design — the _claim_batch_id
-    conditional PUT stays the correctness backstop either way, and
-    heartbeats are payload rewrites instead of mtime touches). A URI
-    root with no backend raises rather than silently running O_EXCL
-    against a local path that merely LOOKS like a bucket.
-
     The hand-rolled log gave snapshot/time-travel/idempotency for a
     SINGLE writer; two concurrent ``ingest_bronze_incremental`` calls
     could both read ``max(batch_id)``, mint the SAME id, and both
     pass the dump-key gate before either committed — duplicate bronze
     rows and a corrupted version history. This lock serializes the
-    gate→append→commit critical section the way Delta's LogStore
+    gate→append→commit critical section (and every refresh,
+    compaction and erasure that takes it) the way Delta's LogStore
     serializes `_delta_log` commits (put-if-absent), scoped per table
     root.
 
-    Mechanics: ``O_CREAT|O_EXCL`` on ``<root>/manifest/.commit.lock``
-    — atomic claim on POSIX, with a unique owner TOKEN written into
-    the file. Release unlinks only if the token is still ours. A
-    holder that died is broken after ``stale_after`` seconds
-    WITHOUT a heartbeat: while held, a daemon thread refreshes the
-    lockfile mtime every ``stale_after/4`` seconds, so a LIVE holder
-    whose ingest runs longer than ``stale_after`` (routine at the
-    100 TB posture — one bronze append is multiple Spark jobs) never
-    looks stale; only a holder whose process died (heartbeat stopped)
-    ages past the break threshold. Breaking is via atomic rename +
-    re-stat: exactly one
-    breaker wins the rename, and a fresh claim that raced into the
-    stat→rename window is restored with ``os.link`` (atomic
-    fail-if-exists, never clobbering a third claim; the remaining
-    double-race — two sub-millisecond claims landing inside a window
-    gated behind a 600 s staleness precondition — is the advisory-
-    lock residual noted below). NOTE the documented
-    production boundary: O_EXCL is not atomic on NFS/object stores —
-    a real deployment swaps this for a table format's commit protocol
-    (Delta/Iceberg) or a lock service; every caller goes through this
-    one context manager so the swap is one function.
+    One implementation for every store: the lock is the object
+    ``<root>/manifest/.commit.lock`` held through a commit backend —
+    the explicit ``backend``, else the env-injected one
+    (``SPARK_GRAFT_COMMIT_BACKEND``), else ``cb.LocalFSBackend`` for
+    local roots. A URI root with neither raises rather than locking a
+    local path that merely LOOKS like a bucket.
 
-    Defense in depth behind the boundary (r12, VERDICT r11 item 4):
-    the manifest mint inside the critical section ALSO claims its
-    batch_id via put-if-absent (_claim_batch_id). If this lock's
-    primitive ever fails to exclude, the double-mint is detected
-    there and the losing writer aborts loudly (ConcurrentCommitError)
-    BEFORE its manifest append — version history stays uncorrupted;
-    at worst, overlapping dump sets from genuinely-concurrent writers
-    can still double-append bronze rows (closing that too requires a
+    Mechanics: claim via conditional PUT of a payload carrying a
+    unique owner TOKEN and a ``beat_at`` time. While held, a daemon
+    thread rewrites ``beat_at`` every ``stale_after/4`` seconds, so a
+    LIVE holder whose section runs longer than ``stale_after``
+    (routine at the 100 TB posture — one bronze append is multiple
+    Spark jobs) never looks stale; only a holder whose process died
+    (heartbeat stopped) ages past the break threshold. With the
+    OPTIONAL ``replace_if_match`` CAS verb (S3 If-Match etag PUT;
+    ``LocalFSBackend`` has it) EVERY state transition is conditional
+    on the exact prior bytes (r14): stale break swaps the dead
+    holder's exact payload for the breaker's claim (exactly one of N
+    racing breakers wins), the HEARTBEAT swaps our own last payload
+    for a fresher one (a thief's intervening claim changes the bytes,
+    so a delayed beat cleanly loses instead of overwriting the thief),
+    and RELEASE swaps our payload for a ``released`` tombstone that
+    the next contender CAS-claims (a post-ownership-proof DELETE
+    could kill a breaker's fresh claim; the tombstone can't).
+    Consequence: a released lock reads as a tombstone object, not as
+    absent. Without the verb everything degrades to best-effort
+    read-check-then-write forms: two breakers can both delete+claim
+    and briefly double-hold, a delayed heartbeat can overwrite a
+    thief.
+
+    Defense in depth behind the lock (r12, VERDICT r11 item 4): the
+    lock is contention control, not the correctness layer. The
+    manifest mint inside the critical section ALSO claims its
+    batch_id via put-if-absent (_claim_batch_id). If the lock ever
+    fails to exclude, the double-mint is detected there and the
+    losing writer aborts loudly (ConcurrentCommitError) BEFORE its
+    manifest append — version history stays uncorrupted; at worst,
+    overlapping dump sets from genuinely-concurrent writers can still
+    double-append bronze rows (closing that too requires a
     staged-commit table format, which remains the multi-host answer).
-    Exclusion itself is contract-tested across PROCESSES (not just
-    threads); under a simulated NON-ATOMIC rename the tests show
-    exclusion can genuinely break (a breaker's delayed unlink-by-name
-    evicts a live claim) — what they pin instead is that the claim
-    layer converts that into detected retries with an uncorrupted
-    version log (tests/test_commit_lock.py)."""
-    # r13 review finding: resolve the env-injected backend for EVERY
-    # root, not just URI roots — a deployment with the env hook set
-    # locks local trees through the backend too (ingest/gold callers
-    # already did via _lock_backend), so a direct commit_lock caller
-    # (compaction's lock_root) shares the same lock namespace instead
-    # of silently splitting POSIX-vs-backend and voiding exclusion.
+    Exclusion is contract-tested across PROCESSES, not just threads
+    (tests/test_commit_lock.py)."""
     # Acquisition budget: how long a writer queues behind peers before
     # giving up. The right value scales with how long a PEER's locked
     # commit section runs — which depends on deployment (cluster size,
@@ -207,136 +189,22 @@ def commit_lock(
     # single-host default. An explicit ``timeout`` argument wins.
     if timeout is None:
         timeout = float(os.environ.get("SPARK_GRAFT_LOCK_TIMEOUT", "120"))
+    # r13 review finding: resolve the env-injected backend for EVERY
+    # root, not just URI roots, so direct callers and backend_for(paths)
+    # callers share one lock namespace
     backend = backend or cb.injected_backend()
-    if backend is None and cb.is_uri(root):
-        raise ValueError(
-            f"commit_lock on URI root {root!r} needs a commit "
-            "backend (plans/commit_backend.py)"
-        )
-    if backend is None:
-        # normalizes file: URIs so the lockfile can't land in a
-        # literal './file:/...' directory (shared gate, r13 review)
-        root = cb.local_path(root, "commit_lock")
-    lockfile = os.path.join(root, "manifest", ".commit.lock")
-    if backend is not None:
-        with _backend_lock(lockfile, backend, timeout, stale_after):
-            yield
-        return
-    os.makedirs(os.path.dirname(lockfile), exist_ok=True)
-    token = f"{os.getpid()}-{os.urandom(8).hex()}"
-    deadline = time.monotonic() + timeout
-
-    def _claim() -> bool:
-        try:
-            fd = os.open(lockfile, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError:
-            return False
-        os.write(
-            fd,
-            json.dumps(
-                {"token": token, "claimed_at": time.time()}
-            ).encode(),
-        )
-        os.close(fd)
-        return True
-
-    def _owned() -> bool:
-        try:
-            with open(lockfile, "rb") as fh:
-                return json.loads(fh.read()).get("token") == token
-        except (OSError, ValueError):
-            return False
-
-    while True:
-        if _claim():
-            break
-        try:
-            age = time.time() - os.path.getmtime(lockfile)
-        except OSError:
-            continue  # holder released between open and stat
-        if age > stale_after:
-            # break via atomic RENAME (one breaker wins), then
-            # re-stat the moved file: a FRESH claim that raced into
-            # the stat→rename window is put back via link (atomic
-            # fail-if-exists), never clobbering a third claim
-            broken = f"{lockfile}.breaking.{os.getpid()}"
-            try:
-                os.rename(lockfile, broken)
-            except OSError:
-                continue  # someone else broke or released it
-            try:
-                still_stale = (
-                    time.time() - os.path.getmtime(broken) > stale_after
-                )
-            except OSError:
-                continue
-            if not still_stale:
-                with contextlib.suppress(OSError):
-                    os.link(broken, lockfile)
-            with contextlib.suppress(OSError):
-                os.unlink(broken)
-            continue
-        if time.monotonic() > deadline:
-            raise TimeoutError(
-                f"commit lock {lockfile} held for {age:.0f}s "
-                f"(timeout {timeout}s)"
+    if cb.is_uri(root):
+        if backend is None:
+            raise ValueError(
+                f"commit_lock on URI root {root!r} needs a commit "
+                "backend (plans/commit_backend.py)"
             )
-        time.sleep(0.05)
-    # liveness heartbeat: refresh the lockfile mtime while the
-    # critical section runs, so stale-break only ever evicts a DEAD
-    # holder, never a live long-running one (review finding r11)
-    stop_beat = threading.Event()
-
-    def _beat() -> None:
-        while not stop_beat.wait(stale_after / 4.0):
-            # token check first: if a double-race stole the lock, do
-            # not freshen the thief's claim file
-            if _owned():
-                with contextlib.suppress(OSError):
-                    os.utime(lockfile, None)
-
-    beat = threading.Thread(
-        target=_beat, daemon=True, name="commit-lock-heartbeat"
-    )
-    beat.start()
-    try:
-        yield
-    finally:
-        stop_beat.set()
-        beat.join(timeout=5.0)
-        # token-checked release: if our lock was stolen by a stale
-        # break double-race, do NOT unlink the current holder's claim
-        if _owned():
-            with contextlib.suppress(FileNotFoundError):
-                os.unlink(lockfile)
-
-
-@contextlib.contextmanager
-def _backend_lock(lockfile: str, backend, timeout: float,
-                  stale_after: float):
-    """commit_lock's object-store variant: claim via conditional PUT,
-    heartbeat by rewriting the payload's beat_at (buckets have no
-    mtime to touch). With the OPTIONAL ``replace_if_match`` CAS verb
-    (S3 If-Match etag PUT) EVERY state transition is conditional on
-    the exact prior bytes (r14, closing the r13 advisor findings):
-    stale break swaps the dead holder's exact payload for the
-    breaker's claim (exactly one of N racing breakers wins), the
-    HEARTBEAT swaps our own last payload for a fresher one (a thief's
-    intervening claim changes the bytes, so a delayed beat cleanly
-    loses instead of overwriting the thief), and RELEASE swaps our
-    payload for a ``released`` tombstone that the next contender
-    CAS-claims (a post-ownership-proof DELETE could kill a breaker's
-    fresh claim; the tombstone can't). Consequence: on CAS backends a
-    released lock reads as a tombstone object, not as absent.
-    Without the verb everything degrades to the documented
-    best-effort read-check-then-write forms: two breakers can both
-    delete+claim and briefly double-hold, a delayed heartbeat can
-    overwrite a thief. Either way the lock is contention control,
-    not the correctness layer: a double-held critical section
-    double-MINTS, and the _claim_batch_id conditional PUT turns that
-    into one loud ConcurrentCommitError before any manifest append
-    (the exact defense-in-depth contract the r12 non-atomic-rename
-    tests pinned for the POSIX lock)."""
+    else:
+        # normalizes file: URIs so the lock can't land in a literal
+        # './file:/...' directory (shared gate, r13 review)
+        root = cb.local_path(root, "commit_lock")
+        backend = backend or cb.LocalFSBackend()
+    lockfile = os.path.join(root, "manifest", ".commit.lock")
     token = f"{os.getpid()}-{os.urandom(8).hex()}"
     deadline = time.monotonic() + timeout
     cas = getattr(backend, "replace_if_match", None)
@@ -460,7 +328,7 @@ def _backend_lock(lockfile: str, backend, timeout: float,
                         break  # stolen — not ours to release
                 except ValueError:
                     break
-                if backend.replace_if_match(
+                if cas(
                     lockfile,
                     json.dumps(
                         {"released": True, "released_at": time.time()}
@@ -472,6 +340,48 @@ def _backend_lock(lockfile: str, backend, timeout: float,
             backend.delete(lockfile)
 
 
+def _serialized_writer(fn):
+    """Decorator: run the whole body of a ``(spark, paths, ...)``
+    writer under the tree's commit lock, backend-routed through
+    ``cb.backend_for(paths)``. Every incremental refresh and the
+    erasure path carry it: two concurrent refreshes would
+    dynamic-overwrite the same partitions or race a gold's aside
+    swap, and a refresh or erasure racing an ingest could scan or
+    rewrite a partition mid-append. Declared ON each writer itself
+    (r14 review): one added without it would silently run unlocked."""
+
+    @functools.wraps(fn)
+    def wrapper(spark, paths, *args, **kwargs):
+        with commit_lock(paths.root, backend=cb.backend_for(paths)):
+            return fn(spark, paths, *args, **kwargs)
+
+    return wrapper
+
+
+_PART_KEYS = ["region", "realm_slug", "dump_date"]
+
+
+def _write_partitioned(
+    df: DataFrame, path: str, mode: str = "overwrite"
+) -> None:
+    """THE medallion table write: one shuffle on the partition keys so
+    each (region, realm_slug, dump_date) partition lands as one file
+    per write, partitioned the same way as bronze so serving reads
+    prune identically. Overwrite is DYNAMIC: it replaces exactly the
+    partitions present in ``df`` (idempotent re-runs, incremental
+    refreshes), never the whole table."""
+    if mode == "overwrite":
+        df.sparkSession.conf.set(
+            "spark.sql.sources.partitionOverwriteMode", "dynamic"
+        )
+    (
+        df.repartition(*_PART_KEYS)
+        .write.mode(mode)
+        .partitionBy(*_PART_KEYS)
+        .parquet(path)
+    )
+
+
 def ingest_bronze(
     spark: SparkSession, raw: DataFrame, paths: MedallionPaths
 ) -> None:
@@ -481,22 +391,9 @@ def ingest_bronze(
     any downstream layer can be rebuilt — the reference keeps gzip
     JSON in GCS for the same reason.
     """
-    _dynamic_overwrite(spark)
-    (
-        raw.withColumn("dump_date", F.to_date("dump_ts"))
-        .repartition("region", "realm_slug", "dump_date")
-        .write.mode("overwrite")
-        .partitionBy("region", "realm_slug", "dump_date")
-        .parquet(paths.bronze)
+    _write_partitioned(
+        raw.withColumn("dump_date", F.to_date("dump_ts")), paths.bronze
     )
-
-
-def _lock_backend(paths: MedallionPaths):
-    """The backend the COMMIT LOCK should use for this tree, or None
-    for the battle-tested POSIX O_EXCL path: an explicitly-supplied or
-    env-injected backend wins (so lock and claims always agree on the
-    primitive), plain local roots keep the rename-based lock."""
-    return getattr(paths, "backend", None) or cb.injected_backend()
 
 
 def _table_has_data(paths: MedallionPaths, d: str) -> bool:
@@ -563,7 +460,7 @@ def ingest_bronze_incremental(
     manifest version, so a reader racing an in-flight append filters
     the uncommitted keys out."""
     keys = ["region", "realm_slug", "dump_ts"]
-    with commit_lock(paths.root, backend=_lock_backend(paths)):
+    with commit_lock(paths.root, backend=cb.backend_for(paths)):
         return _ingest_bronze_locked(spark, raw, paths, keys)
 
 
@@ -623,12 +520,10 @@ def _ingest_gated(
         fresh = raw.join(
             F.broadcast(append_keys.select(*keys)), keys, "left_semi"
         )
-        (
-            fresh.withColumn("dump_date", F.to_date("dump_ts"))
-            .repartition("region", "realm_slug", "dump_date")
-            .write.mode("append")
-            .partitionBy("region", "realm_slug", "dump_date")
-            .parquet(paths.bronze)
+        _write_partitioned(
+            fresh.withColumn("dump_date", F.to_date("dump_ts")),
+            paths.bronze,
+            mode="append",
         )
     finally:
         if append_keys is not new_keys:
@@ -639,12 +534,11 @@ def _ingest_gated(
     # plain parquet. max() is a tiny agg over the dumps-count-sized
     # manifest. The id is additionally CLAIMED via put-if-absent
     # (_claim_batch_id, r12) before the parquet append: under a
-    # working commit_lock the claim never contends, and if the lock's
-    # O_EXCL primitive silently failed to exclude (the documented
-    # NFS boundary) a double-mint surfaces as a loud
-    # ConcurrentCommitError instead of two batches silently sharing
-    # one version (which would merge them in every as-of read and
-    # gold fold). Claim ids survive a crash between claim and append,
+    # working commit_lock the claim never contends, and if the lock
+    # ever failed to exclude (a no-CAS backend's best-effort stale
+    # break) a double-mint surfaces as a loud ConcurrentCommitError
+    # instead of two batches silently sharing one version (which
+    # would merge them in every as-of read and gold fold). Claim ids survive a crash between claim and append,
     # so versions may have gaps — every consumer orders/filters by
     # batch_id, never assumes density.
     prev = manifest.agg(F.max("batch_id")).first()[0]
@@ -655,9 +549,8 @@ def _ingest_gated(
         raise ConcurrentCommitError(
             f"batch_id {batch_id} was claimed by another writer while "
             f"this ingest held {os.path.join(paths.root, 'manifest')}'s "
-            "commit lock — the lock primitive is not excluding on this "
-            "filesystem (O_EXCL is advisory on NFS/object stores). "
-            "Bronze rows for this batch are already appended; retrying "
+            "commit lock — the lock is not excluding on this commit "
+            "backend. Bronze rows for this batch are already appended; retrying "
             "the same ingest completes the interrupted commit "
             "idempotently. For multi-host writers deploy a real commit "
             "protocol (Delta/Iceberg or a conditional-PUT LogStore)."
@@ -673,9 +566,9 @@ def _ingest_gated(
 
 class ConcurrentCommitError(RuntimeError):
     """Two writers minted the same manifest version — commit_lock's
-    exclusion failed (possible on filesystems where O_EXCL is not
-    atomic). The losing commit is aborted BEFORE its manifest append,
-    so a retry completes it idempotently via the bronze orphan gate."""
+    exclusion failed (possible on a backend without the CAS verb,
+    whose stale break is best-effort). The losing commit is aborted
+    BEFORE its manifest append, so a retry completes it idempotently via the bronze orphan gate."""
 
 
 def _claims_dir(paths: MedallionPaths) -> str:
@@ -721,13 +614,13 @@ def _prune_claims(paths: MedallionPaths, below: int) -> None:
 def _claim_batch_id(paths: MedallionPaths, batch_id: int) -> bool:
     """Put-if-absent claim of one manifest version — THE conditional-
     put swap point (VERDICT r11 item 4, pluggable as of r13/VERDICT
-    r12 item 2): on a local FS the backend's put_if_absent is
-    O_CREAT|O_EXCL; an object-store deployment injects a backend
-    whose put_if_absent is an If-None-Match/generation-match
+    r12 item 2): on a local FS the backend's put_if_absent is a
+    stage-then-``os.link`` create; an object-store deployment injects
+    a backend whose put_if_absent is an If-None-Match/generation-match
     conditional PUT (S3/GCS both support it) and the mint above
     becomes multi-host safe without touching any caller. The claim
     contract itself (exactly one winner per id, loser aborts before
-    its manifest append) is proven over a NON-O_EXCL backend in
+    its manifest append) is proven across processes in
     tests/test_commit_backend.py."""
     return cb.backend_for(paths).put_if_absent(
         os.path.join(_claims_dir(paths), str(batch_id)),
@@ -779,49 +672,41 @@ def manifest_versions(spark: SparkSession, paths: MedallionPaths) -> list[int]:
     ]
 
 
-def build_silver(spark: SparkSession, paths: MedallionPaths) -> None:
-    """S6/A1 — collapse bronze into mini-auctions per realm snapshot.
-
-    One hash-agg shuffle keyed by the full collapse key; partition
-    layout matches bronze so serving reads prune identically.
-    """
-    _dynamic_overwrite(spark)
-    bronze = read_bronze(spark, paths)
-    mini = (
-        bronze.groupBy(
-            "region", "realm_slug", "dump_date", "dump_ts", *ops.COLLAPSE_KEYS
-        )
+def _collapse(bronze: DataFrame) -> DataFrame:
+    """S6/A1 — bronze rows → mini-auctions per realm snapshot: one
+    hash-agg shuffle keyed by the full collapse key."""
+    return (
+        bronze.groupBy(*_PART_KEYS, "dump_ts", *ops.COLLAPSE_KEYS)
         .agg(
             F.array_sort(F.collect_list("auc")).alias("auc_list"),
             F.count("*").alias("auc_count"),
         )
         .withColumn("buyout_per", F.col("buyout") / F.col("quantity"))
     )
-    (
-        mini.repartition("region", "realm_slug", "dump_date")
-        .write.mode("overwrite")
-        .partitionBy("region", "realm_slug", "dump_date")
-        .parquet(paths.silver)
+
+
+def _price_stats(silver: DataFrame) -> DataFrame:
+    """S7/A2/W1 — silver mini-auctions → per-item price stats per
+    (realm, snapshot ts)."""
+    exploded = silver.select(
+        *_PART_KEYS, "dump_ts", "item", "buyout", "quantity",
+        F.explode("auc_list").alias("auc"),
     )
+    return ops.price_stats(
+        exploded, group_keys=[*_PART_KEYS, "dump_ts", "item"]
+    )
+
+
+def build_silver(spark: SparkSession, paths: MedallionPaths) -> None:
+    """S6/A1 — collapse bronze into mini-auctions per realm snapshot."""
+    _write_partitioned(_collapse(read_bronze(spark, paths)), paths.silver)
 
 
 def build_gold_prices(spark: SparkSession, paths: MedallionPaths) -> None:
     """S7/A2/W1 — per-item price stats per (realm, snapshot ts),
     appended as the pricelist history (date-partitioned)."""
-    _dynamic_overwrite(spark)
-    silver = spark.read.parquet(paths.silver)
-    exploded = silver.select(
-        "region", "realm_slug", "dump_date", "dump_ts", "item",
-        "buyout", "quantity", F.explode("auc_list").alias("auc"),
-    )
-    stats = ops.price_stats(
-        exploded, group_keys=["region", "realm_slug", "dump_date", "dump_ts", "item"]
-    )
-    (
-        stats.repartition("region", "realm_slug", "dump_date")
-        .write.mode("overwrite")
-        .partitionBy("region", "realm_slug", "dump_date")
-        .parquet(paths.gold_prices)
+    _write_partitioned(
+        _price_stats(spark.read.parquet(paths.silver)), paths.gold_prices
     )
 
 
@@ -883,13 +768,7 @@ def prune_retention(
     filtering — never the full table."""
     gold = spark.read.parquet(paths.gold_prices)
     kept = gold.filter(F.col("dump_date") >= F.lit(cutoff_date).cast("date"))
-    _dynamic_overwrite(spark)
-    (
-        kept.repartition("region", "realm_slug", "dump_date")
-        .write.mode("overwrite")
-        .partitionBy("region", "realm_slug", "dump_date")
-        .parquet(paths.gold_prices + "_pruned")
-    )
+    _write_partitioned(kept, paths.gold_prices + "_pruned")
 
 
 def run_all(spark: SparkSession, raw: DataFrame, root: str) -> MedallionPaths:
@@ -899,112 +778,6 @@ def run_all(spark: SparkSession, raw: DataFrame, root: str) -> MedallionPaths:
     build_gold_prices(spark, paths)
     build_gold_churn(spark, paths)
     return paths
-
-
-def compact_small_files(
-    spark: SparkSession,
-    table_dir: str,
-    target_bytes: int = 128 * 1024 * 1024,
-    lock_root: str = None,
-) -> dict:
-    """Small-file compaction for a partitioned parquet table — the
-    standing maintenance job every streaming/incremental sink needs:
-    frequent small appends (one file per micro-batch per partition)
-    degrade scan parallelism bookkeeping and NameNode/object-store
-    metadata until someone rewrites the partitions at a sane file
-    size.
-
-    Per leaf partition directory: if it holds more than one data file
-    below ``target_bytes`` total-per-file average, rewrite it to
-    ``ceil(bytes / target_bytes)`` files via a repartition write to a
-    temp dir + atomic directory swap. Partitions already at target
-    are left untouched — at 100 TB the job cost scales with the DIRTY
-    partitions, not the table. Returns counts for observability.
-
-    (Table formats with transactions — Iceberg/Delta — do this as
-    `rewriteDataFiles`/`OPTIMIZE`; plain parquet + dynamic partition
-    overwrite is the dependency-free equivalent, and the swap below is
-    per-partition so readers never see a half state larger than one
-    partition.)
-
-    Concurrency (r11): pass ``lock_root`` (the medallion table root)
-    to take the same ``commit_lock`` writers use — without it, a
-    compaction walking a partition while an ingest appends to it can
-    delete-list files written mid-walk or leave the partition torn
-    for the concurrent WRITER's gate scan. Readers racing the swap
-    remain a documented residual of plain parquet (a manifest-pinned
-    reader re-reads the same rows either way; a table format's commit
-    protocol is the production answer).
-    """
-    import math
-    import shutil
-
-    # Rename-based machinery: a bucket cannot os.rename, and os.walk
-    # over a URI path silently yields NOTHING — the job would report
-    # "0 compacted, 0 skipped" as if the table were clean (r13, with
-    # the object-store commit backend landing: the compaction layer
-    # stays local-FS-only BY CONTRACT; Delta/Iceberg OPTIMIZE is the
-    # bucket answer). Shared gate also normalizes file: URIs.
-    table_dir = cb.local_path(table_dir, "compact_small_files")
-
-    # One swap implementation for the whole repo: the scratch naming
-    # (DOT-prefixed, invisible to Spark's file index and partition
-    # parser) and crash healing live in plans.maintenance. An earlier
-    # inline copy here used a non-hidden '<partition>.compact.tmp'
-    # scratch with no recovery — an interrupted run left a dir Spark
-    # listed as data (duplicate rows / broken partition values) and a
-    # window where the partition existed only in tmp (r11 review
-    # finding). Local import: maintenance imports medallion's
-    # load_manifest function-locally, so this cannot cycle.
-    from server_spark.plans.maintenance import (
-        _OLD_PREFIX,
-        _TMP_PREFIX,
-        _heal_interrupted,
-        _scratch,
-    )
-
-    if lock_root is not None:
-        with commit_lock(lock_root):
-            return compact_small_files(
-                spark, table_dir, target_bytes, lock_root=None
-            )
-
-    _heal_interrupted(table_dir)
-    compacted = skipped = 0
-    # collect candidates BEFORE mutating: renaming a directory out
-    # from under an in-flight os.walk is undefined enough to avoid
-    candidates: list[tuple[str, int, int]] = []
-    for dirpath, dirnames, filenames in os.walk(table_dir):
-        dirnames[:] = [
-            d for d in dirnames if not d.startswith(("_", "."))
-        ]
-        data_files = [
-            f
-            for f in filenames
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        ]
-        if not data_files:
-            continue
-        total = sum(
-            os.path.getsize(os.path.join(dirpath, f)) for f in data_files
-        )
-        candidates.append((dirpath, len(data_files), total))
-    for dirpath, n_files, total in candidates:
-        if n_files <= 1 or total / n_files >= target_bytes:
-            skipped += 1
-            continue
-        n_out = max(1, math.ceil(total / target_bytes))
-        df = spark.read.parquet(dirpath)
-        tmp = _scratch(dirpath, _TMP_PREFIX)
-        df.repartition(n_out).write.mode("overwrite").parquet(tmp)
-        # two-rename swap: a crash anywhere leaves either the old or
-        # the new partition recoverable by _heal_interrupted
-        old = _scratch(dirpath, _OLD_PREFIX)
-        os.rename(dirpath, old)
-        os.rename(tmp, dirpath)
-        shutil.rmtree(old)
-        compacted += 1
-    return {"compacted_partitions": compacted, "skipped_partitions": skipped}
 
 
 def _affected_partitions(
@@ -1023,6 +796,7 @@ def _affected_partitions(
     )
 
 
+@_serialized_writer
 def build_silver_incremental(
     spark: SparkSession, paths: MedallionPaths, since_version: int
 ) -> int:
@@ -1044,50 +818,23 @@ def build_silver_incremental(
     refreshes racing each other would dynamic-overwrite the SAME
     partition directories concurrently (interleaved temp-dir commits
     can tear a partition), and a refresh racing an ingest could scan
-    bronze mid-append. Serializing table maintenance against intake
-    is the same rule compact_small_files follows."""
-    with commit_lock(paths.root, backend=_lock_backend(paths)):
-        return _build_silver_incremental_locked(
-            spark, paths, since_version
-        )
-
-
-def _build_silver_incremental_locked(
-    spark: SparkSession, paths: MedallionPaths, since_version: int
-) -> int:
+    bronze mid-append. Table maintenance serializes against intake."""
     parts = _affected_partitions(spark, paths, since_version)
     n = parts.count()
     if n == 0:
         return 0
-    _dynamic_overwrite(spark)
-    keys = ["region", "realm_slug", "dump_date"]
     bronze = (
         read_bronze(spark, paths)
         .withColumn("dump_date", F.to_date("dump_ts"))
         # semi-join on the partition columns: DPP prunes the bronze
         # scan to the affected partitions
-        .join(F.broadcast(parts), keys, "left_semi")
+        .join(F.broadcast(parts), _PART_KEYS, "left_semi")
     )
-    mini = (
-        bronze.groupBy(
-            "region", "realm_slug", "dump_date", "dump_ts",
-            *ops.COLLAPSE_KEYS,
-        )
-        .agg(
-            F.array_sort(F.collect_list("auc")).alias("auc_list"),
-            F.count("*").alias("auc_count"),
-        )
-        .withColumn("buyout_per", F.col("buyout") / F.col("quantity"))
-    )
-    (
-        mini.repartition(*keys)
-        .write.mode("overwrite")
-        .partitionBy(*keys)
-        .parquet(paths.silver)
-    )
+    _write_partitioned(_collapse(bronze), paths.silver)
     return n
 
 
+@_serialized_writer
 def build_gold_prices_incremental(
     spark: SparkSession, paths: MedallionPaths, since_version: int
 ) -> int:
@@ -1096,36 +843,12 @@ def build_gold_prices_incremental(
     changed. Run AFTER build_silver_incremental for the same
     ``since_version``. Serialized under ``commit_lock`` like every
     other writer (r11)."""
-    with commit_lock(paths.root, backend=_lock_backend(paths)):
-        return _build_gold_prices_incremental_locked(
-            spark, paths, since_version
-        )
-
-
-def _build_gold_prices_incremental_locked(
-    spark: SparkSession, paths: MedallionPaths, since_version: int
-) -> int:
     parts = _affected_partitions(spark, paths, since_version)
     n = parts.count()
     if n == 0:
         return 0
-    _dynamic_overwrite(spark)
-    keys = ["region", "realm_slug", "dump_date"]
     silver = spark.read.parquet(paths.silver).join(
-        F.broadcast(parts), keys, "left_semi"
+        F.broadcast(parts), _PART_KEYS, "left_semi"
     )
-    exploded = silver.select(
-        "region", "realm_slug", "dump_date", "dump_ts", "item",
-        "buyout", "quantity", F.explode("auc_list").alias("auc"),
-    )
-    stats = ops.price_stats(
-        exploded,
-        group_keys=["region", "realm_slug", "dump_date", "dump_ts", "item"],
-    )
-    (
-        stats.repartition(*keys)
-        .write.mode("overwrite")
-        .partitionBy(*keys)
-        .parquet(paths.gold_prices)
-    )
+    _write_partitioned(_price_stats(silver), paths.gold_prices)
     return n

@@ -1,10 +1,10 @@
 """Backend-routed VERSIONED TABLE maintenance (r14, VERDICT r13 item 1).
 
 The last POSIX-ism in the medallion story: compaction / Z-order /
-table swap (`plans.maintenance`, `medallion.compact_small_files`) are
-two-rename directory swaps, so an object-store deployment got
-transactional ingest (the r13 commit backend) but no layout rewrite —
-`commit_backend.local_path` rejects URI roots loudly. This module is
+table swap (`plans.maintenance`: `compact_partitions` and the gold
+table swaps) are two-rename directory swaps, so an object-store
+deployment got transactional ingest (the r13 commit backend) but no
+layout rewrite — `commit_backend.local_path` rejects URI roots loudly. This module is
 the standard warehouse answer, built on the SAME five-verb backend
 protocol plus its optional CAS verb: data lives in IMMUTABLE
 GENERATIONS and a tiny CURRENT-VERSION POINTER object is swapped

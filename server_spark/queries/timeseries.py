@@ -4378,11 +4378,16 @@ def t44_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     # everything after the lead() window pass and one k²-row agg is
     # narrow. Row/column semantics are the join form's: an entry
     # exists there iff its dense cell > 0 (all p are strictly
-    # positive), so the pi > 0 filter reproduces vfinal's key set,
-    # and ns stays COUNT(DISTINCT s) of P¹ (= size(ss)) exactly as
-    # the oracle computes it. Interleaved A/B: 2.16 -> 0.97 s median
-    # with bit-identical output (scripts/exp_r15b.py t44A/t44B);
-    # oracle hash-green at every sf.
+    # positive), so the pi > 0 filter reproduces vfinal's key set.
+    # ns is COUNT(DISTINCT s) of P¹ (= size(ss)), as the oracle
+    # computes it (ns FROM p1); the join form counted P^64's sources
+    # instead, which differs only when a dangling sink kills every
+    # walk from some state before step 64 — there the old output
+    # diverged from the oracle and this one matches it (pinned by
+    # tests/test_analytics.py::test_t44_terminal_sink_matches_oracle).
+    # Interleaved A/B: 2.16 -> 0.97 s median, output bit-identical on
+    # the generated corpora (scripts/exp_r15b.py t44A/t44B); oracle
+    # hash-green at every sf.
     one = (
         p.agg(
             F.sort_array(F.collect_set("s")).alias("ss"),

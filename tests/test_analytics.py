@@ -1090,6 +1090,52 @@ def test_t44_stationary_matches_numpy(spark):
     )
 
 
+def test_t44_terminal_sink_matches_oracle(spark, tmp_path):
+    """A dangling sink (a state entered but never left) kills every
+    walk through it before step 64. The normalizer must still be the
+    number of distinct P^1 sources, as the DuckDB oracle computes it;
+    counting P^64's sources (the earlier join form) diverges here."""
+    import datetime as dt
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from server_spark.parity_check import TABLES, run_parity
+    from server_spark.registry import queries
+
+    sf = tmp_path / "sink"
+    sf.mkdir()
+    for t in TABLES:
+        if t != "events":
+            os.symlink(f"{SF_SMOKE}/{t}.parquet", sf / f"{t}.parquet")
+    # user 1 alternates a <-> b; user 2 goes c -> d, and d is never left
+    seqs = {1: ["a", "b"] * 4, 2: ["c", "d"]}
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [
+        {"event_id": uid * 100 + i, "ts": t0 + dt.timedelta(minutes=i),
+         "user_id": uid, "event_type": et, "value": 1.0, "props": "{}"}
+        for uid, seq in seqs.items()
+        for i, et in enumerate(seq)
+    ]
+    schema = pq.read_schema(f"{SF_SMOKE}/events.parquet")
+    pq.write_table(
+        pa.Table.from_pylist(rows, schema=schema), sf / "events.parquet"
+    )
+
+    passed, _, failed = run_parity(
+        spark, str(sf), only={"t44_markov_stationary"}, verbose=False
+    )
+    assert passed == ["t44_markov_stationary"], failed
+    got = {
+        r["state"]: r["stationary_prob"]
+        for r in queries()["t44_markov_stationary"](spark, str(sf)).collect()
+    }
+    # P^64 keeps a and b on themselves and loses c's mass; ns counts
+    # the three P^1 sources a, b, c (P^64 alone has two)
+    assert got == {"a": _r4(1 / 3), "b": _r4(1 / 3)}
+
+
 # ---------------------------------------------------------------------------
 # x108 / procrustes operator — numpy reference + planted-rotation recovery
 # ---------------------------------------------------------------------------

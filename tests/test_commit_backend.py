@@ -1,14 +1,13 @@
 """Pluggable put-if-absent commit backend (r13, VERDICT r12 item 2).
 
 The medallion claim/lock machinery's correctness must come from the
-backend PROTOCOL (conditional PUT / GET / LIST / DELETE), not from the
-O_EXCL primitive the default local backend happens to use. These tests
-prove the contract over a backend that does NOT use O_EXCL
-(LinkConditionalPutBackend — stage + os.link, the local analog of an
-S3 If-None-Match PUT), exercise the env/explicit injection rules the
-JPEG codec hook established, and pin that object-store URI roots route
-every correctness-bearing operation through the backend and never
-touch the local filesystem.
+backend PROTOCOL (conditional PUT / GET / LIST / DELETE), not from any
+one filesystem primitive. These tests prove the contract over the
+local backend (LocalFSBackend — stage + os.link, the local analog of
+an S3 If-None-Match PUT) and an in-memory bucket fake, exercise the
+env/explicit injection rules the JPEG codec hook established, and pin
+that object-store URI roots route every correctness-bearing operation
+through the backend and never touch the local filesystem.
 """
 
 from __future__ import annotations
@@ -53,14 +52,10 @@ class MemBackend:
         self.objs.pop(path, None)
 
 
-@pytest.mark.parametrize(
-    "backend_cls", [cb.LocalFSBackend, cb.LinkConditionalPutBackend]
-)
-def test_put_if_absent_exactly_one_winner(tmp_path, backend_cls):
+def test_put_if_absent_exactly_one_winner(tmp_path):
     """The correctness-bearing verb: N concurrent writers of one key,
-    exactly one True — for the O_EXCL default AND the link-based
-    conditional-put fake."""
-    be = backend_cls()
+    exactly one True."""
+    be = cb.LocalFSBackend()
     key = str(tmp_path / "claims" / "7")
     wins = []
 
@@ -102,14 +97,14 @@ def test_injected_backend_resolution(monkeypatch):
     assert cb.injected_backend() is None
     monkeypatch.setenv(
         "SPARK_GRAFT_COMMIT_BACKEND",
-        "server_spark.plans.commit_backend:LinkConditionalPutBackend",
+        "server_spark.plans.commit_backend:LocalFSBackend",
     )
     be = cb.injected_backend()
-    assert isinstance(be, cb.LinkConditionalPutBackend)
+    assert isinstance(be, cb.LocalFSBackend)
     assert cb.injected_backend() is be  # cached per spec
     # configured-but-broken must raise loudly, never fall back: a
-    # silent local-O_EXCL fallback on a bucket deployment silently
-    # loses multi-driver exclusion
+    # silent local fallback on a bucket deployment silently loses
+    # multi-driver exclusion
     monkeypatch.setenv("SPARK_GRAFT_COMMIT_BACKEND", "no_such_mod:f")
     with pytest.raises(ImportError):
         cb.injected_backend()
@@ -129,7 +124,7 @@ def test_uri_roots_gated_on_backend(monkeypatch):
     # env hook accepts too
     monkeypatch.setenv(
         "SPARK_GRAFT_COMMIT_BACKEND",
-        "server_spark.plans.commit_backend:LinkConditionalPutBackend",
+        "server_spark.plans.commit_backend:LocalFSBackend",
     )
     assert med.MedallionPaths("gs://bucket/lake").is_uri
     # local roots and file: URIs keep the r12 normalization behavior
@@ -165,10 +160,10 @@ def test_claims_route_through_backend_on_uri_root(monkeypatch):
 
 
 def test_backend_lock_mutual_exclusion(tmp_path):
-    """The backend lock variant serializes a critical section using
-    only protocol verbs (claim via conditional PUT, release via
-    token-checked DELETE)."""
-    be = cb.LinkConditionalPutBackend()
+    """The lock serializes a critical section using only protocol
+    verbs (claim via conditional PUT, release via a token-checked
+    tombstone swap)."""
+    be = cb.LocalFSBackend()
     root = str(tmp_path / "lake")
     order: list[str] = []
 
@@ -196,7 +191,7 @@ def test_backend_lock_mutual_exclusion(tmp_path):
 def test_backend_lock_breaks_dead_holder(tmp_path):
     """A holder whose process died stops rewriting beat_at; the next
     contender breaks the lock after stale_after without a heartbeat."""
-    be = cb.LinkConditionalPutBackend()
+    be = cb.LocalFSBackend()
     root = str(tmp_path / "lake")
     lockfile = os.path.join(root, "manifest", ".commit.lock")
     be.put_if_absent(lockfile, json.dumps(
@@ -270,7 +265,7 @@ def test_stale_break_is_atomic_with_cas_backend(tmp_path):
 
 
 def test_backend_lock_timeout(tmp_path):
-    be = cb.LinkConditionalPutBackend()
+    be = cb.LocalFSBackend()
     root = str(tmp_path / "lake")
     lockfile = os.path.join(root, "manifest", ".commit.lock")
     be.put_if_absent(lockfile, cb.lock_payload("live-holder"))
@@ -290,7 +285,7 @@ def test_commit_lock_uri_root_requires_backend(monkeypatch):
 def test_multiprocess_mint_race_over_conditional_put_backend(tmp_path):
     """THE contract test (VERDICT r12 item 2 'done' bar): four real
     processes concurrently mint manifest versions through the
-    NON-O_EXCL conditional-put backend — no lost and no duplicate
+    conditional-put backend — no lost and no duplicate
     batch id. Each worker wins exactly five claims via the real
     _claim_batch_id/_max_claimed_id machinery (explicit backend, no
     env); the final claim set must be exactly 1..20, each id claimed
@@ -308,7 +303,7 @@ sys.path.insert(0, {repo!r})
 from server_spark.plans import commit_backend as cb
 from server_spark.plans import medallion as med
 paths = med.MedallionPaths({root!r},
-                           backend=cb.LinkConditionalPutBackend())
+                           backend=cb.LocalFSBackend())
 wins = 0
 while wins < 5:
     nxt = med._max_claimed_id(paths) + 1
@@ -352,7 +347,7 @@ def test_maintenance_layer_rejects_uri_paths():
         (mnt.partition_file_stats, ("s3://bucket/lake/gold",)),
         (mnt.schema_drift, (None, "s3://bucket/lake/gold")),
         (mnt._gold_watermark, ("s3://bucket/lake/gold/t",)),
-        (med.compact_small_files, (None, "s3://bucket/lake/gold")),
+        (mnt.compact_partitions, (None, "s3://bucket/lake/gold")),
     ):
         with pytest.raises(ValueError, match="local-FS only"):
             fn(*args)
@@ -382,20 +377,19 @@ def test_file_uri_normalizes_instead_of_silent_noop(tmp_path):
 
 def test_commit_lock_uses_injected_backend_for_local_roots(tmp_path,
                                                            monkeypatch):
-    """r13 review: compact_small_files takes commit_lock(root) with no
-    backend argument; when the env hook is set, EVERY commit_lock on
-    any root must resolve the injected backend so direct callers and
-    _lock_backend callers share one lock namespace — a POSIX-vs-
-    backend split voids writer/compaction mutual exclusion."""
+    """r13 review: a caller may take commit_lock(root) with no backend
+    argument (e.g. around a compaction); when the env hook is set,
+    EVERY commit_lock on any root must resolve the injected backend so
+    direct callers and backend_for(paths) callers share one lock
+    namespace — a split voids writer/compaction mutual exclusion."""
     monkeypatch.setenv(
         "SPARK_GRAFT_COMMIT_BACKEND",
-        "server_spark.plans.commit_backend:LinkConditionalPutBackend",
+        "server_spark.plans.commit_backend:LocalFSBackend",
     )
     root = str(tmp_path / "lake")
     lockfile = os.path.join(root, "manifest", ".commit.lock")
     with med.commit_lock(root, timeout=10.0):
-        # the backend lock writes a JSON payload with beat_at — the
-        # POSIX lock writes token/claimed_at only
+        # the lock object is a JSON payload with beat_at
         doc = json.loads(open(lockfile).read())
         assert "beat_at" in doc
     # CAS backend → release tombstone, not a deleted lockfile (r14)
@@ -408,7 +402,7 @@ def test_backend_lock_timeout_under_release_churn(tmp_path):
     starved contender could spin past its timeout forever. A holder
     that keeps the lock under rapid re-claim churn must still produce
     TimeoutError within bounds."""
-    be = cb.LinkConditionalPutBackend()
+    be = cb.LocalFSBackend()
     root = str(tmp_path / "lake")
     lockfile = os.path.join(root, "manifest", ".commit.lock")
     stop = threading.Event()
@@ -466,7 +460,7 @@ def test_ingest_pipeline_with_injected_backend(spark, tmp_path,
 
     monkeypatch.setenv(
         "SPARK_GRAFT_COMMIT_BACKEND",
-        "server_spark.plans.commit_backend:LinkConditionalPutBackend",
+        "server_spark.plans.commit_backend:LocalFSBackend",
     )
     paths = med.MedallionPaths(str(tmp_path / "lake"))
     ts = dt.datetime(2026, 8, 1, 12, 0, 0)

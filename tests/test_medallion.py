@@ -170,7 +170,9 @@ def test_compaction_heals_interrupted_swap(spark, tmp_path):
     """Crash recovery: stale dot-prefixed scratch dirs from an
     interrupted run are resolved on entry — a leftover tmp is
     discarded, a leftover old with no live partition is restored —
-    and Spark never lists scratch contents as data."""
+    and Spark never lists scratch contents as data. Holds for the
+    plain root and its ``file:`` spelling alike (healing must walk
+    the normalized path, or the orphaned partition stays hidden)."""
     import os
     import shutil
 
@@ -182,72 +184,40 @@ def test_compaction_heals_interrupted_swap(spark, tmp_path):
         compact_partitions,
     )
 
-    root = str(tmp_path / "frag")
-    base = spark.range(1000).select(
-        (F.col("id") % 2).alias("region"), F.col("id").alias("v")
-    )
-    for _ in range(5):
-        base.repartition(2).write.mode("append").partitionBy("region").parquet(root)
-    checksum = spark.read.parquet(root).agg(F.sum("v")).collect()[0][0]
+    for i, spelling in enumerate(("{}", "file:{}")):
+        root = str(tmp_path / f"frag{i}")
+        base = spark.range(1000).select(
+            (F.col("id") % 2).alias("region"), F.col("id").alias("v")
+        )
+        for _ in range(5):
+            base.repartition(2).write.mode("append").partitionBy(
+                "region"
+            ).parquet(root)
+        checksum = spark.read.parquet(root).agg(F.sum("v")).collect()[0][0]
 
-    part0 = os.path.join(root, "region=0")
-    # crash point A: tmp written, swap not started → tmp must be
-    # discarded; live partition untouched
-    shutil.copytree(part0, os.path.join(root, _TMP_PREFIX + "region=0"))
-    # crash point B: first rename done (partition moved to old),
-    # second rename never happened → old must be restored
-    part1 = os.path.join(root, "region=1")
-    os.rename(part1, os.path.join(root, _OLD_PREFIX + "region=1"))
+        part0 = os.path.join(root, "region=0")
+        # crash point A: tmp written, swap not started → tmp must be
+        # discarded; live partition untouched
+        shutil.copytree(part0, os.path.join(root, _TMP_PREFIX + "region=0"))
+        # crash point B: first rename done (partition moved to old),
+        # second rename never happened → old must be restored
+        part1 = os.path.join(root, "region=1")
+        os.rename(part1, os.path.join(root, _OLD_PREFIX + "region=1"))
 
-    # scratch dirs are invisible to the reader (dot-prefixed), so the
-    # crashed state reads as "partition 1 missing", never as dupes
-    visible = spark.read.parquet(root).agg(F.sum("v")).collect()[0][0]
-    assert visible < checksum
+        # scratch dirs are invisible to the reader (dot-prefixed), so
+        # the crashed state reads as "partition 1 missing", never as
+        # dupes
+        visible = spark.read.parquet(root).agg(F.sum("v")).collect()[0][0]
+        assert visible < checksum
 
-    compact_partitions(spark, root, target_bytes=1 << 30, min_files=4)
-    assert not any(
-        d.startswith((_TMP_PREFIX, _OLD_PREFIX)) for d in os.listdir(root)
-    )
-    assert spark.read.parquet(root).agg(F.sum("v")).collect()[0][0] == checksum
-
-
-def test_compact_small_files(spark, tmp_path):
-    """Compaction merges many tiny per-batch files into few, leaves
-    healthy partitions alone, and never changes the data."""
-    import os
-
-    from server_spark.plans.medallion import compact_small_files
-
-    tdir = str(tmp_path / "gold")
-    df = spark.range(0, 2000).withColumn(
-        "part", (F.col("id") % 2).cast("string")
-    )
-    # simulate 10 micro-batch appends -> 10+ small files per partition
-    for i in range(10):
-        df.filter(F.col("id") % 10 == i).write.mode("append").partitionBy(
-            "part"
-        ).parquet(tdir)
-    before = {
-        d: len([f for f in os.listdir(os.path.join(tdir, d)) if f.endswith(".parquet")])
-        for d in os.listdir(tdir)
-        if d.startswith("part=")
-    }
-    assert all(n >= 10 for n in before.values())
-    want = sorted(r["id"] for r in spark.read.parquet(tdir).collect())
-
-    stats = compact_small_files(spark, tdir, target_bytes=64 * 1024 * 1024)
-    assert stats["compacted_partitions"] == 2
-    after = {
-        d: len([f for f in os.listdir(os.path.join(tdir, d)) if f.endswith(".parquet")])
-        for d in os.listdir(tdir)
-        if d.startswith("part=")
-    }
-    assert all(n == 1 for n in after.values()), after
-    got = sorted(r["id"] for r in spark.read.parquet(tdir).collect())
-    assert got == want
-    # second run is a no-op
-    stats2 = compact_small_files(spark, tdir, target_bytes=64 * 1024 * 1024)
-    assert stats2["compacted_partitions"] == 0
+        compact_partitions(
+            spark, spelling.format(root), target_bytes=1 << 30, min_files=4
+        )
+        assert not any(
+            d.startswith((_TMP_PREFIX, _OLD_PREFIX)) for d in os.listdir(root)
+        ), spelling
+        total = spark.read.parquet(root).agg(F.sum("v")).collect()[0][0]
+        assert total == checksum, spelling
 
 
 def test_zorder_layout_prunes_both_dimensions(spark, tmp_path):

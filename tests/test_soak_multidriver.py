@@ -33,7 +33,7 @@ import pytest
 
 REPO = Path(__file__).resolve().parent.parent
 
-_BACKEND_SPEC = "server_spark.plans.commit_backend:LinkConditionalPutBackend"
+_BACKEND_SPEC = "server_spark.plans.commit_backend:LocalFSBackend"
 
 _WORKER = """
 import datetime as dt

@@ -4,8 +4,8 @@ The contract under test: compaction / Z-order / table swap work on an
 OBJECT-STORE root — no rename, no os.walk — by writing immutable data
 generations and CAS-swapping a current-version pointer through the
 commit backend's verbs. The simulated URI root maps ``s3://bucket/…``
-keys onto a tmp directory through a LinkConditionalPutBackend subclass
-(same fake the r13 mint-race contract tests use), with the optional
+keys onto a tmp directory through a wrapped LocalFSBackend (the
+backend the r13 mint-race contract tests use), with the optional
 ``io_path`` verb translating keys to the paths Spark's reader/writer
 should use — so the WHOLE protocol (pointer CAS, generation listing,
 Spark parquet IO) runs end-to-end without cloud credentials, and a
@@ -28,7 +28,7 @@ from server_spark.plans import versioned_table as vt
 class MappedS3Backend:
     """Simulated bucket: every verb translates the ``s3://bucket/``
     key prefix onto a local directory and delegates to a wrapped
-    LinkConditionalPutBackend (composition, not subclassing — the
+    LocalFSBackend (composition, not subclassing — the
     local backend's verbs call each other, and an inheriting mapper
     would map twice), and ``io_path`` hands Spark the same
     translation — the role a Hadoop S3 connector plays for a real
@@ -37,7 +37,7 @@ class MappedS3Backend:
     def __init__(self, local_root: str, bucket: str = "s3://bucket"):
         self.local_root = local_root
         self.bucket = bucket.rstrip("/") + "/"
-        self._inner = cb.LinkConditionalPutBackend()
+        self._inner = cb.LocalFSBackend()
 
     def _map(self, path: str) -> str:
         assert path.startswith(self.bucket), (
